@@ -70,8 +70,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # - repartition(32): single-file input = one partition otherwise;
     # - project only the two scalar sizes out of the builder, derive the
     #   rest from the scalars (each extra reference to the raw array is
-    #   another inlined builder copy under projection collapse — the
-    #   dedup_minhash 64-lambda pathology).
+    #   another inlined builder copy under projection collapse).
     base = (
         dc.where(F.size(F.split("text", " ")) >= 3)
         .repartition(fanout(spark))

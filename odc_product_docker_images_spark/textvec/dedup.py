@@ -8,9 +8,8 @@ Scale notes (100 TB):
 - Exact: one hash-aggregate on a 64-bit content key (``xxhash64`` in
   production; md5 here because the DuckDB oracle lacks xxhash). Shuffle
   carries (hash, doc_id) only — never the text.
-- MinHash/LSH: banding turns O(n²) similarity into equi-join on band
-  buckets; candidate pairs only are verified.  ``approxSimilarityJoin``
-  does exactly this under the hood.
+- MinHash/LSH: banding turns O(n²) similarity into one aggregate on
+  band buckets; candidate pairs only are verified.
 - Exact n-gram Jaccard: explode shingles → self-equi-join on shingle →
   count intersections.  Shuffle volume = total shingle count, not n².
   Feasible when shingle frequency is bounded; the LSH path replaces it
@@ -123,10 +122,11 @@ def dedup_minhash(
     spark: SparkSession, sf_dir: str, audit_pct: int | None = None
 ) -> DataFrame:
     """X2: MinHash+LSH near-dup pairs, the scale-ready banded design:
-    explode shingles → K=64 seeded xxhash64 per shingle ROW → minhash =
-    64 MIN aggregates per doc (one hash-agg) → 16 band signatures of 4
-    rows → explode bands → bucket equi-join for candidates → verify with
-    EXACT set Jaccard (array_intersect) → filter.
+    one row per document holding its distinct shingle array → K=64
+    seeded minhashes and 16 band signatures of 4 rows in that same row
+    (``_minhash_candidates``) → one (band, signature) bucket aggregate
+    for candidates → verify with EXACT set Jaccard (array_intersect of
+    the same per-document arrays) → filter.
 
     ``audit_pct`` (gate-only knob, not part of the registered key):
     restrict the corpus to the deterministic Knuth-hash doc slice before
@@ -137,89 +137,25 @@ def dedup_minhash(
     semi-join against slice truth returns identical hits at a fraction
     of the cost (``dedup_minhash_recall``).
 
-    Two deliberate shapes:
-    - Row-wise hashing then MIN-aggregate, NOT array_min over 64 nested
-      transforms: projection collapse would inline the shingle-builder
-      into each of the 64 lambdas — a pathological expression tree
-      (measured 60s; this form ~2s).
-    - Banding with R=4 rows: candidate probability 1-(1-j⁴)¹⁶, a steep
-      s-curve at j≈0.5.  ``ml.MinHashLSH``'s single-hash bands make
-      candidate probability equal RAW Jaccard — floods the verifier on a
-      high-base-similarity corpus (dedup_minhash_ml, kept for contrast).
-    At 100 TB: shuffle = shingle rows + n·B band rows; no n² anywhere."""
+    Banding with R=4 rows: candidate probability 1-(1-j⁴)¹⁶, a steep
+    s-curve at j≈0.5.  ``ml.MinHashLSH``'s single-hash bands make
+    candidate probability equal RAW Jaccard — floods the verifier on a
+    high-base-similarity corpus (dedup_minhash_ml, kept for contrast).
+    At 100 TB: shuffle = one shingle array per doc + n·B band rows; no
+    n² anywhere but inside a shared bucket."""
     dc = load(spark, sf_dir, "documents")
     if audit_pct is not None:
         # gate count = PRE-filter table count = footer row count (r13, §5)
         dc = dc.where(
             audit_gate("doc_id", table_rows(sf_dir, "documents"), audit_pct, _AUDIT_N0_DOC)
         )
-    # Two deliberate repartitions around the shingle builder:
-    # - BEFORE: the fixture is one parquet file = one partition, and the
-    #   builder (concat_ws × positions + array_distinct + explode) is the
-    #   single most expensive projection in the plan — round-robin it
-    #   across tasks or it runs serially (measured 4.8s of the 8.4s key).
-    # - AFTER: the hash(doc_id) Exchange is REUSED by both consumers of
-    #   `ex` (signature agg and verification sets), so the builder still
-    #   runs exactly once and both groupBys need no further shuffle — do
-    #   NOT replace with checkpoint/persist (measured slower).
-    ex = (
-        dc.repartition(fanout(spark))
-        .select("doc_id", F.explode(_shingles()).alias("sh"))
-        .repartition(fanout(spark), "doc_id")
-    )
-    return _minhash_pairs_from_ex(ex)
-
-
-def _minhash_pairs_from_ex(ex: DataFrame) -> DataFrame:
-    """Banded-MinHash candidate generation + exact-Jaccard verify over a
-    prebuilt exploded ``(doc_id, sh)`` table (hash(doc_id)-partitioned or
-    cached).  Split out so ``dedup_minhash_recall`` can feed ONE shared
-    sliced shingle build to both its truth kernel and this candidate
-    path instead of scanning + shingling the corpus twice."""
-    # hash the shingle STRING once; the K hash functions are int mixes of
-    # that base hash — ~64x less string hashing for identical LSH quality.
-    # ROW form (explode the K mixes, ONE narrow min-agg) rather than K
-    # min-agg columns: the 64-buffer HashAggregate generated ~8.7s of JIT
-    # compilation per cold run (measured); this shape compiles in ms and
-    # the cell count through the aggregate is identical.  No extra
-    # Exchange anywhere: hash(doc_id) partitioning from `ex` satisfies
-    # both the (doc_id, i) and (doc_id, band) groupings.
-    hashed = ex.select("doc_id", F.xxhash64("sh").alias("hs")).select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(_MH_K - 1)),
-                lambda i: F.xxhash64(i, F.col("hs")),
-            )
-        ).alias("i", "h"),
-    )
-    mins = hashed.groupBy("doc_id", "i").agg(F.min("h").alias("mh"))
-    srt = F.array_sort(F.collect_list(F.struct("i", "mh")))
-    banded = (
-        mins.withColumn("band", (F.col("i") / _MH_R).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(srt.alias("s"))
-        .select(
-            "doc_id",
-            "band",
-            # same 4-column xxhash as the wide form → identical signatures
-            F.xxhash64(*[F.col("s")[r]["mh"] for r in range(_MH_R)]).alias("sig"),
-        )
-    )
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sets = ex.groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
+    # the hash(doc_id) Exchange is REUSED by all three consumers (the
+    # signature projection and both verification sides), so the shingle
+    # builder below it runs exactly once
+    docs = _doc_shingles(dc).repartition(fanout(spark), "doc_id")
+    cand = _minhash_candidates(docs)
+    sa = docs.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
+    sb = docs.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
     inter = F.size(F.array_intersect("shs_a", "shs_b"))
     union = F.size("shs_a") + F.size("shs_b") - inter
     jac = inter / union
@@ -228,6 +164,75 @@ def _minhash_pairs_from_ex(ex: DataFrame) -> DataFrame:
         .join(sb, "doc_b")
         .where(jac >= 0.5)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("est_jaccard"))
+    )
+
+
+def _doc_shingles(dc: DataFrame) -> DataFrame:
+    """``(doc_id, shs)``: one row per document with at least one 3-word
+    shingle, ``shs`` its distinct shingle array.  The round-robin
+    fan-out spreads the builder over every core (a single-file input is
+    one partition).  The filter is on the CHEAP token count (≥3 tokens
+    ⇔ ≥1 shingle), before the fan-out: a filter on the shingle array
+    itself would be pushed below the Repartition and run the builder
+    serially on the scan (see text_repetition).  The non-null doc_id
+    filter is the one a join on doc_id infers anyway; stating it here
+    keeps every consumer's subtree identical, so exchange reuse can
+    share one build between a join side and a join-free consumer (a
+    null id never pairs)."""
+    return (
+        dc.where((F.size(F.split("text", " ")) >= 3) & F.col("doc_id").isNotNull())
+        .repartition(fanout(dc))
+        .select("doc_id", _shingles().alias("shs"))
+    )
+
+
+def _band_signatures(docs: DataFrame) -> DataFrame:
+    """``(doc_id, band, sig)``: the B=16 MinHash band signatures of every
+    ``_doc_shingles`` row, computed once, in the document's own row.
+
+    Each shingle STRING is hashed once (``hs``); the K=64 hash functions
+    are int mixes ``xxhash64(i, h)`` of that base hash, minhash i is the
+    ``array_min`` of mix i over the doc's array, and band b's signature
+    is ``xxhash64`` of minhashes 4b..4b+3 — no per-(shingle, i) rows, no
+    aggregate, no Python worker.  ``hs`` is its own projection below the
+    64 minima: it is referenced 64 times, so projection collapse leaves
+    it there instead of inlining it into every lambda.  The expression
+    is one SQL string: building its 64 lambdas through the Column API
+    takes ~2,700 Py4J round trips, which cost more driver time per call
+    than the signatures take to run on a 1,000-document corpus."""
+    mins = [f"array_min(transform(hs, h -> xxhash64({i}, h)))" for i in range(_MH_K)]
+    sigs = ", ".join(
+        f"xxhash64({', '.join(mins[b * _MH_R : (b + 1) * _MH_R])})" for b in range(_MH_B)
+    )
+    hs = docs.select("doc_id", F.expr("transform(shs, s -> xxhash64(s))").alias("hs"))
+    return hs.select("doc_id", F.posexplode(F.expr(f"array({sigs})")).alias("band", "sig"))
+
+
+def _minhash_candidates(docs: DataFrame) -> DataFrame:
+    """Banded-MinHash candidate pairs ``(doc_a, doc_b)``, a < b, that
+    share at least one band bucket, from ``_doc_shingles`` rows.  The
+    ONE MinHash path: ``dedup_minhash`` verifies these pairs and
+    ``dedup_minhash_recall`` semi-joins them against exact truth.
+
+    ONE ``groupBy(band, sig)`` collects each bucket's sorted doc ids and
+    every member pairs with the members after it (posexplode + slice):
+    exactly the a < b pairs sharing a bucket, with the signatures built
+    once — a band self-join runs the whole signature subtree once per
+    side.  ``distinct`` folds pairs that share several bands."""
+    ids = F.col("ids")
+    return (
+        _band_signatures(docs)
+        .groupBy("band", "sig")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .where(F.size(ids) > 1)
+        .select("ids", F.posexplode(ids).alias("p", "doc_a"))
+        .select(
+            "doc_a",
+            F.explode(F.slice(ids, F.col("p") + 2, F.size(ids) - F.col("p") - 1)).alias(
+                "doc_b"
+            ),
+        )
+        .distinct()
     )
 
 
@@ -240,15 +245,7 @@ def dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     dc = load(spark, sf_dir, "documents")
-    # cheap token-count filter (≥3 tokens ⇔ ≥1 shingle) BEFORE the
-    # repartition: a filter on the shingle array itself would be pushed
-    # below the Repartition and run the builder serially on the
-    # single-partition scan (see text_repetition)
-    sh = (
-        dc.where(F.size(F.split("text", " ")) >= 3)
-        .repartition(fanout(spark))
-        .select("doc_id", _shingles().alias("shs"))
-    )
+    sh = _doc_shingles(dc)
     tf = HashingTF(inputCol="shs", outputCol="features", numFeatures=1 << 18, binary=True)
     feats = tf.transform(sh)
     lsh = MinHashLSH(inputCol="features", outputCol="bands", numHashTables=8, seed=42)
@@ -480,15 +477,13 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit_gate("doc_id", table_rows(sf_dir, "documents"), _AUDIT_PCT, _AUDIT_N0_DOC)
     )
     # Shared sliced shingle build — the single most expensive projection
-    # in either half; persist it round-robin-partitioned and let each
-    # consumer add its own Exchange (sh for the truth join, doc_id for
-    # the signature aggs) on top of the cache.
-    ex_base = (
-        dc.repartition(fanout(spark))
-        .select("doc_id", F.explode(_shingles()).alias("sh"))
-        .persist()
+    # in either half; persist the per-document arrays and let each
+    # consumer read the cache: the truth join explodes them and adds its
+    # sh Exchange, the candidate run signs them in place.
+    docs = _doc_shingles(dc).persist()
+    ex = docs.select("doc_id", F.explode("shs").alias("sh")).repartition(
+        fanout(spark), "sh"
     )
-    ex = ex_base.repartition(fanout(spark), "sh")
     sz = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
@@ -515,10 +510,10 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair-local (see dedup_minhash's audit_pct note), so this returns
     # EXACTLY the production candidate set restricted to slice×slice
     # pairs — the semi-join below can never use an out-of-slice
-    # candidate anyway.
-    cand = _minhash_pairs_from_ex(ex_base.repartition(fanout(spark), "doc_id")).select(
-        "doc_a", "doc_b"
-    )
+    # candidate anyway.  No Jaccard verify: every truth pair has
+    # j >= 0.7 and passes dedup_minhash's j >= 0.5 verify, so the hits
+    # are the same as against the verified pairs.
+    cand = _minhash_candidates(docs)
     hits = truth.join(cand, ["doc_a", "doc_b"], "left_semi").agg(
         F.count(F.lit(1)).cast("long").alias("hits")
     )

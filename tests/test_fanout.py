@@ -21,11 +21,16 @@ PKG = Path(__file__).resolve().parent.parent / "odc_product_docker_images_spark"
 def test_fanout_tracks_default_parallelism(spark):
     from odc_product_docker_images_spark.io import fanout
 
-    # local[N]: defaultParallelism (32) >= the test session's shuffle
-    # width (8), so the r13 floor changes nothing here
-    assert fanout(spark) == spark.sparkContext.defaultParallelism
-    df = spark.range(1)
-    assert fanout(df) == spark.sparkContext.defaultParallelism
+    # a shuffle width of 1 is below defaultParallelism on any box, so the
+    # r13 floor changes nothing here whatever the core count
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        assert fanout(spark) == spark.sparkContext.defaultParallelism
+        df = spark.range(1)
+        assert fanout(df) == spark.sparkContext.defaultParallelism
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def test_fanout_floors_at_shuffle_width(spark):

@@ -2819,6 +2819,35 @@ def test_minhash_recall_gate_shape(spark):
     C.assert_no_python_row_path(df)
 
 
+def test_minhash_signatures_built_once(spark):
+    """dedup_minhash signs each document once, in one row, and buckets
+    the signatures with one aggregate: after execution the plan reads
+    documents once (the shingle exchange is reused by the signature
+    projection and both verification sides), runs the signature
+    projection in exactly one node, and joins on nothing but doc ids —
+    a band self-join would plan the signature subtree once per side."""
+    from odc_product_docker_images_spark.textvec.dedup import dedup_minhash
+
+    df = dedup_minhash(spark, SF)
+    C.assert_no_python_row_path(df)
+    plan = C.formatted_plan(df)
+    assert "Python" not in plan and "Pandas" not in plan
+    df.collect()
+    # after execution the formatted plan prints the final (reuse-aware)
+    # tree first, then the initial one
+    done = C.formatted_plan(df)
+    final_tree = done.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final_tree
+    assert final_tree.count("Scan parquet") == 1, final_tree
+    keys = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", done)
+    assert keys and not [k for k in keys if re.search(r"\b(band|sig)#", k)], keys
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    final_nodes = executed.split("== Initial Plan ==")[0].splitlines()
+    sig_nodes = [ln for ln in final_nodes if "array_min(transform(" in ln]
+    assert len(sig_nodes) == 1, sig_nodes
+    assert sig_nodes[0].count("array_min(transform(") == 64
+
+
 def test_sketch_gates_shape(spark):
     from odc_product_docker_images_spark.textvec.heavyhitters import (
         sketch_error_gates,

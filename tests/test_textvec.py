@@ -27,6 +27,140 @@ def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):
     assert not missed, f"LSH missed high-similarity pairs: {missed}"
 
 
+def _shingles_py(text: str | None, k: int, distinct: bool) -> list[str]:
+    """Pure-Python reference for ``shingle._shingles``: space-split tokens
+    (empty tokens kept, like Spark's split), k-token windows joined by a
+    space, first occurrences kept under ``distinct``."""
+    if text is None:
+        return []
+    toks = text.split(" ")
+    out = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+    return list(dict.fromkeys(out)) if distinct else out
+
+
+@pytest.mark.parametrize("k", [2, 3, 5, 8])
+def test_shingles_match_python_reference(spark, sf_dir, k):
+    from odc_product_docker_images_spark.io import load
+    from odc_product_docker_images_spark.textvec.shingle import _shingles
+
+    edge = spark.createDataFrame(
+        [
+            (-1, None),
+            (-2, ""),
+            (-3, "one"),
+            (-4, "a  b  c"),  # double spaces → empty tokens
+            (-5, " lead trail "),
+            (-6, "x y x y x y x y x y x y"),  # repeats: distinct matters
+            (-7, " ".join(["w"] * (k - 1))),  # one token short of a shingle
+            (-8, " ".join(f"t{i}" for i in range(k))),  # exactly one shingle
+        ],
+        "doc_id long, text string",
+    )
+    dc = load(spark, sf_dir, "documents").select("doc_id", "text").unionByName(edge)
+    got = dc.select(
+        "doc_id",
+        "text",
+        _shingles(k=k, distinct=True).alias("d"),
+        _shingles(k=k, distinct=False).alias("a"),
+    ).collect()
+    assert len(got) > edge.count()
+    for r in got:
+        assert list(r["d"]) == _shingles_py(r["text"], k, True), r["doc_id"]
+        assert list(r["a"]) == _shingles_py(r["text"], k, False), r["doc_id"]
+
+
+def _minhash_row_form(ex):
+    """Row-form MinHash reference over exploded ``(doc_id, sh)`` rows:
+    posexplode the K int mixes of each shingle's base hash, MIN-aggregate
+    per (doc, i), then xxhash64 each band's R minima in i order."""
+    from pyspark.sql import functions as F
+
+    from odc_product_docker_images_spark.textvec.dedup import _MH_K, _MH_R
+
+    hashed = ex.select("doc_id", F.xxhash64("sh").alias("hs")).select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(_MH_K - 1)),
+                lambda i: F.xxhash64(i, F.col("hs")),
+            )
+        ).alias("i", "h"),
+    )
+    mins = hashed.groupBy("doc_id", "i").agg(F.min("h").alias("mh"))
+    srt = F.array_sort(F.collect_list(F.struct("i", "mh")))
+    return (
+        mins.withColumn("band", (F.col("i") / _MH_R).cast("int"))
+        .groupBy("doc_id", "band")
+        .agg(srt.alias("s"))
+        .select(
+            "doc_id",
+            "band",
+            F.xxhash64(*[F.col("s")[r]["mh"] for r in range(_MH_R)]).alias("sig"),
+        )
+    )
+
+
+def test_minhash_signatures_and_pairs_match_row_form(spark, sf_dir):
+    """The per-document signatures must equal the row-form reference bit
+    for bit, and dedup_minhash's pairs and est_jaccard must equal a band
+    self-join over those reference signatures, verified on exploded
+    shingle sets.  The recall tests cannot see a drifted signature."""
+    from pyspark.sql import functions as F
+
+    from odc_product_docker_images_spark.io import load
+    from odc_product_docker_images_spark.textvec.dedup import (
+        _MH_B,
+        _band_signatures,
+        _doc_shingles,
+        dedup_minhash,
+    )
+    from odc_product_docker_images_spark.textvec.shingle import _shingles
+
+    dc = load(spark, sf_dir, "documents")
+    got_sigs = _band_signatures(_doc_shingles(dc)).toPandas()
+    ex = dc.select("doc_id", F.explode(_shingles()).alias("sh"))
+    ref = _minhash_row_form(ex)
+    ref_sigs = ref.toPandas()
+    key = ["doc_id", "band"]
+    pd.testing.assert_frame_equal(
+        got_sigs.sort_values(key).reset_index(drop=True)[["doc_id", "band", "sig"]],
+        ref_sigs.sort_values(key).reset_index(drop=True)[["doc_id", "band", "sig"]],
+        check_dtype=False,
+    )
+    assert len(got_sigs) == _MH_B * ex.select("doc_id").distinct().count()
+
+    cand = (
+        ref.alias("a")
+        .join(
+            ref.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.sig") == F.col("b.sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    sets = ex.groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
+    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
+    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
+    inter = F.size(F.array_intersect("shs_a", "shs_b"))
+    jac = inter / (F.size("shs_a") + F.size("shs_b") - inter)
+    want = (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .where(jac >= 0.5)
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("est_jaccard"))
+        .toPandas()
+    )
+    got = dedup_minhash(spark, sf_dir).toPandas()
+    assert len(want) > 0
+    pair = ["doc_a", "doc_b"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(pair).reset_index(drop=True),
+        want.sort_values(pair).reset_index(drop=True)[got.columns],
+    )
+
+
 def test_ann_lsh_recall_vs_brute_force(spark, sf_dir):
     from odc_product_docker_images_spark.textvec.dedup import dedup_embedding
     from odc_product_docker_images_spark.textvec.similarity import sim_ann_lsh
